@@ -9,7 +9,8 @@ Spark-first engine over pre-tokenized training sequences
 Layout:
   codecs/    — numpy-vectorized lightweight codecs (dict, RLE, FSST,
                bit-pack, frame-of-reference) + sampled auto-selection
-  chunk.py   — Arrow batch <-> column-chunk decomposition
+  generic.py — the column-chunk kernel (Arrow column <-> codec blobs)
+               and the any-schema engine built on it
   encode.py  — salted repartition-by-range encode pipeline (mapInArrow)
   decode.py  — inverse pass; bit-identical reconstruction
   tablefmt.py— Iceberg-style table metadata layer (snapshots, atomic commit)

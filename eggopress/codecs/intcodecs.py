@@ -331,6 +331,7 @@ def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> by
     # side streams), every candidate was already encoded at FULL size, so
     # keep the blobs and skip the re-encode of the winner below —
     # byte-identical output, roughly half the calls on small streams
+    sample_is_full = len(arr) <= SAMPLE
     full_blobs: dict[str, bytes] = {}
     sizes: list[tuple[int, str]] = []
     for name in candidates:
@@ -339,7 +340,7 @@ def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> by
         except OverflowError:
             continue
         sizes.append((len(b), name))
-        if sample is arr:
+        if sample_is_full:
             full_blobs[name] = b
     sizes.sort()
     # delta must win DECISIVELY (<= 0.7x the best alternative): its
@@ -372,7 +373,7 @@ def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> by
         sizes
         and sizes[0][1] in ("dict", "pfor")
         and any(nm == "forbp" and sz < CLOSE_CALL * sizes[0][0] for sz, nm in sizes)
-        and len(arr) > SAMPLE
+        and not sample_is_full
     ):
         try:
             alt = enc_forbp(arr)

@@ -157,7 +157,7 @@ def _encode_strs_default(lengths: np.ndarray, buf: bytes,
       already <= len(buf): the full plain blob embeds buf verbatim plus
       a non-empty header and lengths stream, so it is strictly larger
       and can never be returned."""
-    sample_is_full = s_len is lengths
+    sample_is_full = len(lengths) <= SAMPLE_ROWS
     s_lblob = encode_ints(s_len)
     p_blob = enc_str_plain(s_len, s_buf, _lblob=s_lblob)
     p_size = len(p_blob)

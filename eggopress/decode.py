@@ -8,10 +8,11 @@ layout — a sources= filter prunes at the parquet scan.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from eggopress import chunk as chunklib
-from eggopress.schema import CORPUS_SCHEMA
+from eggopress import generic
+from eggopress.schema import CORPUS_ARROW_SCHEMA, CORPUS_KINDS, CORPUS_SCHEMA
 from eggopress.tablefmt import Table
 
 
@@ -54,6 +55,15 @@ def read_encoded(spark: SparkSession, table_path: str,
 
 ALL_COLUMNS = tuple(f.name for f in CORPUS_SCHEMA)
 
+# which encoded streams each corpus column needs at decode time; tokens
+# re-nests through the n_tok lengths, so it pulls that stream too
+BLOB_DEPS = {
+    "doc_id": ("doc_id_blob",),
+    "source": ("source_blob",),
+    "n_tok": ("n_tok_blob",),
+    "tokens": ("n_tok_blob", "tokens_blob"),
+}
+
 
 def _resolve_columns(columns: list[str] | None) -> tuple[tuple[str, ...], list[str]]:
     """-> (decode set in corpus-schema order, needed blob column names).
@@ -68,10 +78,32 @@ def _resolve_columns(columns: list[str] | None) -> tuple[tuple[str, ...], list[s
         want = tuple(c for c in ALL_COLUMNS if c in columns)
     blob_names: list[str] = []
     for c in want:
-        for b in chunklib.BLOB_DEPS[c]:
+        for b in BLOB_DEPS[c]:
             if b not in blob_names:
                 blob_names.append(b)
     return want, blob_names
+
+
+def _decode_chunk(want: tuple[str, ...],
+                  blobs: dict[str, bytes]) -> pa.RecordBatch:
+    """Decode only `want` of a chunk through generic's column kernel.
+    `blobs` holds the BLOB_DEPS streams of `want` and nothing else: a
+    projection never touches the undecoded streams."""
+    fields = [f for f in CORPUS_ARROW_SCHEMA if f.name in want]
+    arrays = {f.name: generic._decode_column(
+                  CORPUS_KINDS[f.name], blobs[f"{f.name}_blob"], f)
+              for f in fields if f.name != "tokens"}
+    if "tokens" in want:
+        n_tok = arrays.get("n_tok")
+        if n_tok is None:
+            n_tok = generic._decode_column(
+                CORPUS_KINDS["n_tok"], blobs["n_tok_blob"],
+                CORPUS_ARROW_SCHEMA.field("n_tok"))
+        arrays["tokens"] = generic._decode_list(
+            CORPUS_KINDS["tokens"], n_tok.to_numpy(), blobs["tokens_blob"],
+            CORPUS_ARROW_SCHEMA.field("tokens"))
+    return pa.RecordBatch.from_arrays(
+        [arrays[f.name] for f in fields], schema=pa.schema(fields))
 
 
 def _make_decode_fn(want: tuple[str, ...], blob_names: list[str]):
@@ -79,9 +111,8 @@ def _make_decode_fn(want: tuple[str, ...], blob_names: list[str]):
         for batch in batches:
             cols = {name: batch.column(name) for name in blob_names}
             for i in range(batch.num_rows):  # per-CHUNK loop (thousands of rows each)
-                yield chunklib.decode_chunk_projected(
-                    want, {n: cols[n][i].as_py() for n in blob_names}
-                )
+                yield _decode_chunk(
+                    want, {n: cols[n][i].as_py() for n in blob_names})
     return _decode_fn
 
 
@@ -232,25 +263,22 @@ def _docmap_fn(batches):
     """(chunk_id, doc_id_blob) chunk rows -> (doc_id, chunk_id) pairs;
     only the doc_id stream decodes."""
     import numpy as _np
-    import pyarrow as _pa
 
-    from eggopress.chunk import _string_from_parts
-    from eggopress.codecs import core as _codecs
-
+    field = CORPUS_ARROW_SCHEMA.field("doc_id")
     for batch in batches:
         ids, cids = [], []
         for i in range(batch.num_rows):
-            lengths, buf = _codecs.decode_strs(
-                batch.column("doc_id_blob")[i].as_py())
-            arr = _string_from_parts(lengths, buf)
+            arr = generic._decode_column(
+                CORPUS_KINDS["doc_id"],
+                batch.column("doc_id_blob")[i].as_py(), field)
             ids.append(arr)
             cids.append(_np.full(len(arr),
                                  batch.column("chunk_id")[i].as_py(),
                                  dtype=_np.int64))
         if ids:
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.concat_arrays(ids),
-                 _pa.array(_np.concatenate(cids), type=_pa.int64())],
+            yield pa.RecordBatch.from_arrays(
+                [pa.concat_arrays(ids),
+                 pa.array(_np.concatenate(cids), type=pa.int64())],
                 names=["doc_id", "chunk_id"],
             )
 

@@ -21,9 +21,10 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from eggopress import chunk as chunklib
-from eggopress import conf, lineage as lineagelib
-from eggopress.schema import CHUNK_SCHEMA, CORPUS_ARROW_SCHEMA
+from eggopress import conf, generic, lineage as lineagelib
+from eggopress.schema import (
+    CHUNK_ARROW_SCHEMA, CHUNK_SCHEMA, CORPUS_ARROW_SCHEMA, CORPUS_KINDS,
+)
 from eggopress.tablefmt import Table
 
 
@@ -93,6 +94,46 @@ def _salt_expr(salts: dict[str, int]):
     )
 
 
+def _encode_chunk(batch: pa.RecordBatch, partition_id: str, source: str,
+                  salt: int, chunk_id: int) -> dict:
+    """One corpus batch (all rows of one partition) -> one chunk row, every
+    column through generic's column kernel. tokens keeps only its values
+    blob, so its list lengths must BE n_tok: decode re-nests by n_tok."""
+    streams = {c: generic._encode_column(c, CORPUS_KINDS[c], batch.column(c))
+               for c in ("doc_id", "source", "n_tok")}
+    tokens = batch.column("tokens")
+    lengths, blob, raw, codec = generic._encode_list(
+        "tokens", CORPUS_KINDS["tokens"], tokens)
+    n_tok = batch.column("n_tok").to_numpy(zero_copy_only=False)
+    if not np.array_equal(lengths, n_tok):
+        raise ValueError(
+            f"encode: n_tok disagrees with the tokens list lengths in "
+            f"partition {partition_id} chunk {chunk_id}")
+    streams["tokens"] = (blob, raw, codec)
+    values = tokens.flatten().to_numpy(zero_copy_only=False)
+    row = {
+        "source": source,
+        "salt": salt,
+        "partition_id": partition_id,
+        "chunk_id": chunk_id,
+        "n_rows": batch.num_rows,
+        "n_values": len(values),
+        "raw_bytes": sum(r for _, r, _ in streams.values()),
+        "encoded_bytes": sum(len(b) for b, _, _ in streams.values()),
+        # chunk-skipping stats: a predicate decode prunes chunks whose
+        # [min, max] window misses the predicate (SURVEY.md §4)
+        "n_tok_min": int(n_tok.min()) if len(n_tok) else 0,
+        "n_tok_max": int(n_tok.max()) if len(n_tok) else 0,
+        "tok_min": int(values.min()) if len(values) else 0,
+        "tok_max": int(values.max()) if len(values) else 0,
+    }
+    for c, (blob, _, codec) in streams.items():
+        row[f"{c}_blob"] = blob
+        row[f"{c}_bytes"] = len(blob)
+        row[f"{c}_codec"] = codec
+    return row
+
+
 def _encode_fn(fail_partitions: frozenset[str],
                fail_until_attempt: dict[str, int] | None = None,
                attempts: dict[str, int] | None = None,
@@ -150,7 +191,7 @@ def _encode_fn(fail_partitions: frozenset[str],
                         f"shift={task_shift}); widen the append id layout"
                     )
                 rows.append(
-                    chunklib.encode_batch(
+                    _encode_chunk(
                         corpus_batch.slice(s, e - s),
                         pid,
                         source,
@@ -159,7 +200,7 @@ def _encode_fn(fail_partitions: frozenset[str],
                     )
                 )
                 seq += 1
-            yield chunklib.chunk_rows_to_batch(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=CHUNK_ARROW_SCHEMA)
 
     return fn
 

@@ -22,11 +22,17 @@ every column is an Arrow-buffer-level transform):
   string                 -> (lengths, utf8 buffer) via str codecs
                             (dict / fsst / plain)
   array<int8/16/32/64>   -> lengths stream + values stream, framed into
-                            one blob (the corpus tokens decomposition,
-                            generalized)
+                            one blob. This is the decomposition the corpus
+                            `tokens` column uses: the corpus stores only
+                            the values blob and re-nests from n_tok
+
+_encode_column/_decode_column (with _encode_list/_decode_list, the list
+step they share with the corpus) are the engine's ONE column-chunk
+kernel: the corpus engine (encode.py/decode.py) is the fixed kind map
+schema.CORPUS_KINDS over the same functions.
 
 Nulls are rejected loudly (ValueError) — the codec stack is dense-only,
-same contract as the corpus path.
+for generic and corpus columns alike.
 
 Layout: <path>/data/*.parquet holds one row per CHUNK (chunk_rows input
 rows batched by Arrow), with per-column `<c>__blob` / `<c>__codec`
@@ -52,7 +58,6 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from eggopress.chunk import _string_from_parts, _string_parts
 from eggopress.codecs import core as codecs
 
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -97,11 +102,15 @@ def _colkind(dt: T.DataType) -> str:
     raise ValueError(f"unsupported column type for generic encode: {dt}")
 
 
-def _check_dense(name: str, arr: pa.Array) -> None:
+def _check_dense(name: str, arr: pa.Array) -> pa.Array:
+    """-> arr as one contiguous array; raises on any null."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
     if arr.null_count:
         raise ValueError(
-            f"generic encode is dense-only: column {name!r} has "
+            f"encode is dense-only: column {name!r} has "
             f"{arr.null_count} nulls")
+    return arr
 
 
 def _frame2(a: bytes, b: bytes) -> bytes:
@@ -114,113 +123,118 @@ def _unframe2(blob: bytes) -> tuple[bytes, bytes]:
     return blob[4 : 4 + n], blob[4 + n :]
 
 
+def _string_parts(arr: pa.Array) -> tuple[np.ndarray, bytes]:
+    """StringArray -> (int64 lengths, concatenated utf8 buffer)."""
+    b = arr.cast(pa.binary())
+    offsets = np.frombuffer(
+        b.buffers()[1], dtype=np.int32, count=len(b) + 1 + b.offset
+    )[b.offset :].astype(np.int64)
+    data = b.buffers()[2]
+    buf = b"" if data is None else data.to_pybytes()[offsets[0] : offsets[-1]]
+    return np.diff(offsets), buf
+
+
+def _string_from_parts(lengths: np.ndarray, buf: bytes) -> pa.Array:
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.Array.from_buffers(
+        pa.utf8(), len(lengths),
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(buf)])
+
+
+def _int_stream(kind: str, arr: pa.Array) -> np.ndarray:
+    """A non-string, non-list column -> its int64 codec stream: ints as
+    they are, floats as IEEE bit patterns, timestamps as epoch ticks,
+    dates as days."""
+    if kind == "ts":
+        return arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
+    if kind == "date":
+        arr = arr.cast(pa.int32())
+    vals = arr.to_numpy(zero_copy_only=False)
+    if kind == "f64":
+        return vals.view(np.int64)
+    if kind == "f32":
+        vals = vals.view(np.int32)
+    return vals.astype(np.int64, copy=False)
+
+
+def _from_int64(kind: str, ints: np.ndarray, dtype: pa.DataType) -> pa.Array:
+    """Inverse of _int_stream: int64 stream -> column array of `dtype`."""
+    if kind == "f64":
+        return pa.array(ints.view(np.float64), type=pa.float64())
+    if kind == "f32":
+        return pa.array(ints.astype(np.int32).view(np.float32),
+                        type=pa.float32())
+    if kind == "date":
+        return pa.array(ints.astype(np.int32), type=pa.int32()).cast(dtype)
+    return pa.array(ints, type=pa.int64()).cast(dtype)
+
+
+# list kind -> the kind of its flattened values
+_LIST_VALUES = {"list_int": "int64", "list_f32": "f32", "list_f64": "f64"}
+
+
+def _encode_list(name: str, kind: str,
+                 arr: pa.Array) -> tuple[np.ndarray, bytes, int, str]:
+    """The list decomposition -> (row lengths, values blob, raw bytes,
+    values codec). The lengths stream is the caller's: _encode_column
+    frames it next to the values blob, the corpus re-nests tokens from
+    its n_tok column instead."""
+    arr = _check_dense(name, arr)
+    values = _check_dense(name, arr.flatten())
+    val_blob = codecs.encode_ints(_int_stream(_LIST_VALUES[kind], values))
+    lengths = np.diff(np.asarray(arr.offsets)).astype(np.int64)
+    raw = values.type.bit_width // 8 * len(values) + 4 * len(arr)
+    return lengths, val_blob, raw, codecs.codec_of(val_blob)
+
+
 def _encode_column(name: str, kind: str,
                    arr: pa.Array) -> tuple[bytes, int, str]:
     """-> (blob, raw_bytes, codec). Dispatch is per COLUMN CHUNK, never
-    per row. For list_int the reported codec is the VALUES stream's (the
+    per row. For list kinds the reported codec is the VALUES stream's (the
     framed blob is not a bare codec blob, so codec_of can't read it)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    _check_dense(name, arr)
-    n = len(arr)
-    if kind in ("int8", "int16", "int32", "int64"):
-        ints = arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        blob = codecs.encode_ints(ints)
-        return blob, _KINDS[kind][1] * n, codecs.codec_of(blob)
-    if kind == "f64":
-        bits = arr.to_numpy(zero_copy_only=False).view(np.int64)
-        blob = codecs.encode_ints(bits)
-        return blob, 8 * n, codecs.codec_of(blob)
-    if kind == "f32":
-        bits = arr.to_numpy(zero_copy_only=False).view(np.int32)
-        blob = codecs.encode_ints(bits.astype(np.int64))
-        return blob, 4 * n, codecs.codec_of(blob)
-    if kind == "ts":
-        ints = arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        blob = codecs.encode_ints(ints.astype(np.int64, copy=False))
-        return blob, 8 * n, codecs.codec_of(blob)
-    if kind == "date":
-        ints = arr.cast(pa.int32()).to_numpy(zero_copy_only=False)
-        blob = codecs.encode_ints(ints.astype(np.int64))
-        return blob, 4 * n, codecs.codec_of(blob)
+    if kind in _LIST_VALUES:
+        lengths, val_blob, raw, codec = _encode_list(name, kind, arr)
+        return _frame2(codecs.encode_ints(lengths), val_blob), raw, codec
+    arr = _check_dense(name, arr)
     if kind == "str":
         lengths, buf = _string_parts(arr)
         blob = codecs.encode_strs(lengths, buf)
-        return blob, len(buf) + 4 * n, codecs.codec_of(blob)
-    if kind in ("list_int", "list_f32", "list_f64"):
-        values = arr.flatten()
-        _check_dense(name, values)
-        raw_vals = values.to_numpy(zero_copy_only=False)
-        if kind == "list_f32":
-            flat = raw_vals.astype(np.float32, copy=False).view(
-                np.int32).astype(np.int64)
-            vw = 4
-        elif kind == "list_f64":
-            flat = raw_vals.astype(np.float64, copy=False).view(np.int64)
-            vw = 8
-        else:
-            flat = raw_vals.astype(np.int64, copy=False)
-            vw = 8
-        offs = np.asarray(arr.offsets)
-        lengths = np.diff(offs).astype(np.int64)
-        val_blob = codecs.encode_ints(flat)
-        blob = _frame2(codecs.encode_ints(lengths), val_blob)
-        return blob, vw * len(flat) + 4 * n, codecs.codec_of(val_blob)
-    raise AssertionError(kind)
+        return blob, len(buf) + 4 * len(arr), codecs.codec_of(blob)
+    blob = codecs.encode_ints(_int_stream(kind, arr))
+    return blob, _KINDS[kind][1] * len(arr), codecs.codec_of(blob)
 
 
 def _int_stats(kind: str, arr: pa.Array) -> tuple[int, int, int]:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if kind == "ts":
-        ints = arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-    elif kind == "date":
-        ints = arr.cast(pa.int32()).to_numpy(zero_copy_only=False)
-    else:
-        ints = arr.to_numpy(zero_copy_only=False)
+    ints = _int_stream(kind, arr)
     if not len(ints):
         return 0, 0, 0
     return int(ints.min()), int(ints.max()), int(ints.sum(dtype=np.int64))
 
 
-def _from_int64(kind: str, ints: np.ndarray, field: pa.Field) -> pa.Array:
-    """int64 stream -> typed column array (int-backed kinds only)."""
-    if kind == "date":
-        return pa.array(ints.astype(np.int32), type=pa.int32()).cast(
-            field.type)
-    return pa.array(ints, type=pa.int64()).cast(field.type)
+def _decode_list(kind: str, lengths: np.ndarray, val_blob: bytes,
+                 field: pa.Field) -> pa.Array:
+    """Inverse of _encode_list: re-nest the values blob by `lengths`."""
+    values = _from_int64(_LIST_VALUES[kind], codecs.decode_ints(val_blob),
+                         field.type.value_type)
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int64()).cast(pa.int32()),
+        values,
+    ).cast(field.type)
 
 
 def _decode_column(kind: str, blob: bytes, field: pa.Field) -> pa.Array:
-    if kind in ("int8", "int16", "int32", "int64", "ts", "date"):
-        return _from_int64(kind, codecs.decode_ints(blob), field)
-    if kind == "f64":
-        return pa.array(codecs.decode_ints(blob).view(np.float64),
-                        type=pa.float64())
-    if kind == "f32":
-        bits = codecs.decode_ints(blob).astype(np.int32)
-        return pa.array(bits.view(np.float32), type=pa.float32())
     if kind == "str":
         return _string_from_parts(*codecs.decode_strs(blob))
-    if kind in ("list_int", "list_f32", "list_f64"):
+    if kind in _LIST_VALUES:
         len_blob, val_blob = _unframe2(blob)
-        lengths = codecs.decode_ints(len_blob)
-        ints = codecs.decode_ints(val_blob)
-        if kind == "list_f32":
-            values = pa.array(ints.astype(np.int32).view(np.float32),
-                              type=pa.float32())
-        elif kind == "list_f64":
-            values = pa.array(ints.view(np.float64), type=pa.float64())
-        else:
-            values = pa.array(ints, type=pa.int64()).cast(
-                field.type.value_type)
-        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-            values,
-        ).cast(field.type)
-    raise AssertionError(kind)
+        return _decode_list(kind, codecs.decode_ints(len_blob), val_blob,
+                            field)
+    return _from_int64(kind, codecs.decode_ints(blob), field.type)
 
 
 def _chunk_schema(names: list[str], kinds: dict[str, str]) -> pa.Schema:
@@ -507,7 +521,7 @@ def decode_generic(spark: SparkSession, path: str,
                     if c in where:
                         ints = codecs.decode_ints(blob)
                         arrays.append(
-                            _from_int64(kinds[c], ints, arrow_fields[c]))
+                            _from_int64(kinds[c], ints, arrow_fields[c].type))
                         extras[c] = pa.array(ints, type=pa.int64())
                     else:
                         arrays.append(_decode_column(

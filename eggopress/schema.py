@@ -29,6 +29,12 @@ CORPUS_ARROW_SCHEMA = pa.schema(
     ]
 )
 
+# The corpus as a generic.py kind map: every column encodes and decodes
+# through the generic column kernel. tokens stores only its values stream;
+# its list lengths are the n_tok column.
+CORPUS_KINDS = {"doc_id": "str", "tokens": "list_int", "n_tok": "int32",
+                "source": "str"}
+
 # Encoded chunk rows: one row per (partition, chunk); one blob per logical
 # column. Self-describing blobs (codec + params in the blob header); codec
 # names duplicated as columns for manifest/metrics queries.

@@ -238,3 +238,175 @@ def test_encode_strs_matches_reference_selection():
     for name, strs in {**STR_CASES, **extra}.items():
         lengths, buf = _mk_strs(strs)
         assert sc.encode_strs(lengths, buf) == reference(lengths, buf), name
+
+
+# ------------------------------------------------ format pin (blob bytes)
+
+def _pin_corpus_batch():
+    """Fixed seeded corpus batch (CORPUS_ARROW_SCHEMA), zipf-ish tokens,
+    some empty docs."""
+    import pyarrow as pa
+
+    from eggopress.schema import CORPUS_ARROW_SCHEMA
+
+    rng = np.random.default_rng(20260101)
+    n = 5013
+    n_tok = rng.integers(0, 120, n).astype(np.int32)
+    n_tok[::97] = 0
+    tokens = np.minimum(rng.zipf(1.2, int(n_tok.sum())), 50256).astype(np.int32)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(n_tok, out=offsets[1:])
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"doc-{i:07d}" for i in range(n)], type=pa.string()),
+            pa.ListArray.from_arrays(pa.array(offsets), pa.array(tokens)).cast(
+                CORPUS_ARROW_SCHEMA.field("tokens").type),
+            pa.array(n_tok, type=pa.int32()),
+            pa.array(["web"] * n, type=pa.string()),
+        ],
+        schema=CORPUS_ARROW_SCHEMA,
+    )
+
+
+# column -> kind, for the generic pin batch
+_PIN_KINDS = {"i64": "int64", "i32": "int32", "f32": "f32", "f64": "f64",
+              "f64_wide": "f64", "ts": "ts", "date": "date", "flag": "str",
+              "note": "str", "xs": "list_int", "fs": "list_f64"}
+
+
+def _pin_generic_batch():
+    """Fixed seeded lineitem-like batch: one column per generic kind."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(20260102)
+    n = 5013
+    words = ["quick", "ironic", "deposits", "sleep", "furiously", "final",
+             "packages", "haggle", "bold", "accounts"]
+    lens = rng.integers(0, 9, n)
+    xs_off = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lens, out=xs_off[1:])
+    return pa.RecordBatch.from_pydict({
+        "i64": pa.array(np.cumsum(rng.integers(0, 4, n)) + 10**6, pa.int64()),
+        "i32": pa.array(np.repeat(rng.integers(1, 51, n // 40 + 1), 40)[:n]
+                        .astype(np.int32), pa.int32()),
+        "f64": pa.array(rng.choice(np.arange(900, 1100) / 100.0, n), pa.float64()),
+        "f64_wide": pa.array(rng.integers(90000, 10500000, n) / 100.0,
+                             pa.float64()),
+        "ts": pa.array(694224000000000 + np.sort(rng.integers(0, 2 * 10**14, n)),
+                       pa.timestamp("us")),
+        "date": pa.array((8000 + rng.integers(0, 2500, n)).astype(np.int32),
+                         pa.int32()).cast(pa.date32()),
+        "flag": pa.array(rng.choice(["A", "N", "R"], n).tolist(), pa.string()),
+        "note": pa.array([" ".join(rng.choice(words, 3)) for _ in range(n)],
+                         pa.string()),
+        "xs": pa.ListArray.from_arrays(
+            pa.array(xs_off),
+            pa.array(rng.integers(0, 1000, int(lens.sum())).astype(np.int32))),
+        "f32": pa.array((rng.integers(0, 500, n) / 8.0).astype(np.float32),
+                        pa.float32()),
+        "fs": pa.ListArray.from_arrays(
+            pa.array(xs_off), pa.array(rng.normal(0, 1e6, int(lens.sum())))),
+    })
+
+
+# (rows offset, rows): a small slice where every sample is the whole
+# stream, and a large one where sampling and full encodes diverge; both
+# start mid-batch so slice offsets are honoured
+_PIN_SLICES = {"small": (13, 20), "large": (13, 5000)}
+
+
+# sha256 of every blob of the pin batches, in the format that tables on
+# disk already hold: a change here is a format change (old tables would
+# need a migration), not a refactor
+_PIN_SHA256 = {
+    ("corpus", "small", "doc_id"):
+        "6f0e0e3e54ca31459414d21ae09e03ee3ef6bf140a85c621f9f522c5d73dc1ab",
+    ("corpus", "small", "n_tok"):
+        "2390567f6b05b183f3f920fc2bb37aff382e0dbf502286e0270f15dc925b39c7",
+    ("corpus", "small", "source"):
+        "c14ce85d94592f4899cf2dc76130d1578ec52c3824f208c72aeef37553b6b55b",
+    ("corpus", "small", "tokens"):
+        "1b7d5c07798dbc3258809beebacd8b8c0bef1dae463b547e1a680b48729144c3",
+    ("corpus", "large", "doc_id"):
+        "1b978120c9d9a7a1a1672adb04eca6976a352c81459f445214bb104452fc8d23",
+    ("corpus", "large", "n_tok"):
+        "a5eadc196c113b45132db44f9220decce4aae30d8d5de41b26bb4ef7bd85ff93",
+    ("corpus", "large", "source"):
+        "40e6b8e1d72beff1feff38b3d0cf09755079ef9051e4d608242441e4088801a6",
+    ("corpus", "large", "tokens"):
+        "513abcba99788dec83afa726df08ea1002d177daa3a68004a120febf260fed70",
+    ("generic", "small", "date"):
+        "f96615efa57c66b7135da5ed0cb2e99be2adc94e37c083d95d86c6433859b779",
+    ("generic", "small", "f32"):
+        "14197d47c0dfca94a254b09856e3d5a79e7c3cdeea3a04d18057b90b2f46651d",
+    ("generic", "small", "f64"):
+        "3064886949af650d68e0ff8ca24d2dbc74e1e1e00604d2a91684281315195757",
+    ("generic", "small", "f64_wide"):
+        "079f369e20c4853ed53f9df00708045598287c42a21ffa4bcb6fc0deeb4fac3c",
+    ("generic", "small", "flag"):
+        "4553c6989f914369b542a34aa19300051696f666d0e6edc0e958a63a739cdf58",
+    ("generic", "small", "fs"):
+        "c10ecd8cef07ddd2a53ba3b707a150777e094e66d7884f4c377ceaeee19800eb",
+    ("generic", "small", "i32"):
+        "78de6f09d1f1fafaee1c877eedd1b621f7aad0511dfd8d2b128d7ff5295b0784",
+    ("generic", "small", "i64"):
+        "79bc6278c5f2cfe5fa61702939e300ba14bada6b72834a09e00ded33ff5806b5",
+    ("generic", "small", "note"):
+        "3276f3f8a844a171f748342fa9a468d6d313aa2b21243f3ff19c05816e95e219",
+    ("generic", "small", "ts"):
+        "20698565ebf7d23132ee8525f48621f59865cdeb56503ec1176a99535ec0371f",
+    ("generic", "small", "xs"):
+        "6e8ba0b2e4b5ab5e88dc16d11c7220dc14ad5ef5cd72de95f422e930e7171552",
+    ("generic", "large", "date"):
+        "2e26cd767c5d5e495aee08fcef8187e670f1cca0da73969e61b6372a585075c1",
+    ("generic", "large", "f32"):
+        "7cd0689582e184482f2491bd8c3ca22fe2cd49a94429cf1f25170dade10c35c0",
+    ("generic", "large", "f64"):
+        "82ee52a547e128517ff92b6aaade9c37b0da5cff7ddc009a236da040e3fffb66",
+    ("generic", "large", "f64_wide"):
+        "731790232cf89303e392a3a2c31a3f099ab1b9d61ded88bd9c9cd22c943bd811",
+    ("generic", "large", "flag"):
+        "51a0d3d005845db915251af70c5a0d4efe11b3dc924cac1d1ec38e48bcb06a11",
+    ("generic", "large", "fs"):
+        "dcbc1578e01d61a44a461df291f2c7f65712b1329e52e60cbed4436926f8245a",
+    ("generic", "large", "i32"):
+        "21341dea4969730cba3aaae955c124a65b3a9ad630a5858dc144f414f1c268dc",
+    ("generic", "large", "i64"):
+        "54b1ed137295b9f390b538eaca9381527b1565f37e90145c1dca7f7395674155",
+    ("generic", "large", "note"):
+        "e42ccde1f85d34f1f0530c77185239c6b0ef0159f57e5dbd9d6000e33ebc1df2",
+    ("generic", "large", "ts"):
+        "bb98511518bf81672d64ab590126823350fbaa76adcd7b65fc4c63a71cb44f8d",
+    ("generic", "large", "xs"):
+        "9fb2a3363c1a98f75b73570d7c127cb734143a0abde2f3c2c9639800210fcecb",
+}
+# corpus raw_bytes per pin slice
+_PIN_CORPUS_RAW = {"small": 6336, "large": 1321552}
+
+
+def test_column_kernel_blob_bytes_pinned():
+    """The on-disk format across refactors: every blob the column kernel
+    writes for the fixed corpus and generic pin batches has the recorded
+    sha256, and decodes back to its input exactly."""
+    import hashlib
+
+    from eggopress import decode, encode, generic
+    from eggopress.schema import CORPUS_KINDS
+
+    cb, gb = _pin_corpus_batch(), _pin_generic_batch()
+    got = {}
+    for sl, (off, n) in _PIN_SLICES.items():
+        corpus = cb.slice(off, n)
+        row = encode._encode_chunk(corpus, "source=web/salt=0", "web", 0, 0)
+        for c in CORPUS_KINDS:
+            got[("corpus", sl, c)] = hashlib.sha256(row[f"{c}_blob"]).hexdigest()
+        assert row["raw_bytes"] == _PIN_CORPUS_RAW[sl]
+        blobs = {f"{c}_blob": row[f"{c}_blob"] for c in CORPUS_KINDS}
+        assert decode._decode_chunk(decode.ALL_COLUMNS, blobs).equals(corpus)
+        batch = gb.slice(off, n)
+        for c, kind in _PIN_KINDS.items():
+            blob, _, _ = generic._encode_column(c, kind, batch.column(c))
+            got[("generic", sl, c)] = hashlib.sha256(blob).hexdigest()
+            back = generic._decode_column(kind, blob, batch.schema.field(c))
+            assert back.equals(batch.column(c)), (sl, c)
+    assert got == _PIN_SHA256

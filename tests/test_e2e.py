@@ -27,6 +27,19 @@ def encoded_table(spark, corpus, tmp_path_factory):
     return path, summary
 
 
+@pytest.mark.parametrize("n_tok", [(2, 3), (1, 1)])
+def test_encode_rejects_n_tok_disagreeing_with_tokens(spark, tmp_path, n_tok):
+    """Decode re-nests tokens by n_tok, so a wrong n_tok would move tokens
+    between docs ((2, 3)) or drop them ((1, 1)) without an error; encode
+    must refuse the chunk and name it."""
+    df = spark.createDataFrame(
+        [("d0", [1, 2, 3], n_tok[0], "web"), ("d1", [4, 5], n_tok[1], "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    with pytest.raises(Exception, match=r"n_tok disagrees with the tokens "
+                       r"list lengths in partition source=web/salt=0 chunk \d+"):
+        encode.encode_table(spark, df, str(tmp_path / "t"), n_partitions=1)
+
+
 def test_synth_deterministic(spark):
     a = synth.corpus_pandas(500)
     b = synth.corpus_pandas(500)

@@ -194,6 +194,28 @@ def test_nulls_and_unsupported_types_rejected(spark, tmp_path):
             spark,
             spark.createDataFrame([Row(m={"k": 1})]),
             str(tmp_path / "u"))
+    # the corpus engine encodes through the same column kernel: a null
+    # doc_id must not round-trip as ""
+    from eggopress import encode
+
+    with pytest.raises(Exception, match="dense-only"):
+        encode.encode_table(
+            spark,
+            spark.createDataFrame(
+                [(None, [1, 2], 2, "web"), ("d1", [3], 1, "web")],
+                "doc_id string, tokens array<int>, n_tok int, source string"),
+            str(tmp_path / "c"), n_partitions=1)
+
+
+def test_list_int_raw_bytes_use_element_width(spark, tmp_path):
+    """array<int> raw_bytes = the Arrow size: 4 B per int32 value plus
+    4 B of offsets per row."""
+    df = spark.createDataFrame([([1, 2, 3],), ([],), ([7, 8],)],
+                               "xs array<int>")
+    out = generic.encode_generic(spark, df, str(tmp_path / "xs"),
+                                 n_partitions=1)
+    assert out["chunks"] == 1
+    assert out["raw_bytes"] == 4 * 5 + 4 * 3
 
 
 def test_cli_generic_encode_decode(spark, tmp_path, capsys):
