@@ -12,10 +12,13 @@ decode needs nothing but the blob. Multi-part payloads are framed with
 Int entry points:  ``encode_ints(arr) -> bytes`` / ``decode_ints(blob) -> np.ndarray``
 Str entry points:  ``encode_strs(lengths, buf) -> bytes`` / ``decode_strs(blob) -> (lengths, buf)``
 
-Auto-selection (reference capability C6, SURVEY.md §2.4): encode a
-deterministic sample (first 4096 values) under each candidate, pick the
-smallest, with a final plain-fallback guard — selection depends only on
-chunk content, so re-encoding after failure reproduces identical blobs.
+Auto-selection (reference capability C6, SURVEY.md §2.4) is size-first:
+each candidate builds its sub-streams on a deterministic sample (ints: 8
+contiguous segments spread over the chunk, 4096 values in all; strings:
+the first 2048) and reports its blob's exact size without packing or
+framing it; the smallest wins, only the winner becomes bytes, and a
+plain-size guard follows. Selection depends only on chunk content, so
+re-encoding after failure reproduces identical blobs.
 
 The reference (eggo) delegates all physical encoding to ADAM/Parquet
 (datasets/dbsnp/toast.sh:27-42); these codecs bring that capability

@@ -11,35 +11,25 @@ from __future__ import annotations
 
 import numpy as np
 
+from eggopress.codecs.framing import Lazy
+
 MAX_WIDTH = 32
 
 
 def bit_lengths(x: np.ndarray) -> np.ndarray:
-    """Vectorized int.bit_length() for a uint64 array."""
-    x = x.astype(np.uint64, copy=True)
-    w = np.zeros(x.shape, dtype=np.uint8)
-    for s in (32, 16, 8, 4, 2, 1):
-        m = x >= np.uint64(1 << s)
-        w[m] += s
-        x[m] >>= np.uint64(s)
-    w += x.astype(np.uint8)  # residual x is in {0,1}
-    return w
+    """Vectorized int.bit_length() as uint8, for non-negative integers
+    below 2**53: float64 holds those exactly, so frexp's exponent is the
+    bit length (frexp(0) gives 0). Callers pass uint32 or uint64 arrays of
+    residuals below 2**32 (the MAX_WIDTH cap)."""
+    return np.frexp(x.astype(np.float64))[1].astype(np.uint8)
 
 
-def bit_lengths32(x: np.ndarray) -> np.ndarray:
-    """bit_lengths for uint32 input without widening (hot path)."""
-    x = x.astype(np.uint32, copy=True)
-    w = np.zeros(x.shape, dtype=np.uint8)
-    for s in (16, 8, 4, 2, 1):
-        m = x >= np.uint32(1 << s)
-        w[m] += s
-        x[m] >>= np.uint32(s)
-    w += x.astype(np.uint8)
-    return w
-
-
-def bit_width_of_max(maxval: int) -> int:
-    return int(maxval).bit_length()
+def packed(vals: np.ndarray, width: int) -> Lazy:
+    """pack(vals, width), deferred: its exact size is
+    n*(width//8) + ceil(n*(width%8)/8) bytes, known before packing."""
+    n = len(vals)
+    q, r = divmod(width, 8)
+    return Lazy(n * q + (n * r + 7) // 8, lambda: pack(vals, width))
 
 
 def pack(vals: np.ndarray, width: int) -> bytes:

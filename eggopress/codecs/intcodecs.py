@@ -17,7 +17,7 @@ import numpy as np
 import pyarrow as pa
 
 from eggopress.codecs import bitpack
-from eggopress.codecs.framing import make_blob, pack_parts, split_blob, unpack_parts
+from eggopress.codecs.framing import Lazy, framed, make_blob, split_blob, unpack_parts
 
 BLOCK = 128
 SAMPLE = 4096
@@ -25,14 +25,11 @@ SAMPLE = 4096
 
 # ---------------------------------------------------------------- plain
 
-def enc_plain(arr: np.ndarray) -> bytes:
-    if arr.dtype == np.int32 or (len(arr) and arr.min() >= -(2**31) and arr.max() < 2**31) or len(arr) == 0:
-        payload = arr.astype("<i4").tobytes()
-        w = 4
-    else:
-        payload = arr.astype("<i8").tobytes()
-        w = 8
-    return make_blob({"c": "plain", "n": int(len(arr)), "w": w}, payload)
+def _plain(arr: np.ndarray) -> Lazy:
+    n = len(arr)
+    w = 4 if arr.dtype == np.int32 or n == 0 or (arr.min() >= -(2**31) and arr.max() < 2**31) else 8
+    return make_blob({"c": "plain", "n": n, "w": w},
+                     Lazy(w * n, lambda: arr.astype(f"<i{w}").tobytes()))
 
 
 def dec_plain(header: dict, payload: bytes) -> np.ndarray:
@@ -40,30 +37,9 @@ def dec_plain(header: dict, payload: bytes) -> np.ndarray:
     return np.frombuffer(payload, dtype=dt, count=header["n"]).astype(np.int64)
 
 
-def plain_size(n: int) -> int:
-    return 4 * n + 40  # payload + approx header
-
-
-def plain_blob_size(arr: np.ndarray) -> int:
-    """EXACT len(enc_plain(arr)) without materializing the payload: the
-    plain-fallback guards in encode_ints/_enc_sub only need the size, and
-    building the real blob costs an O(n) copy per call on every encoded
-    stream (pinned equal to the real thing by the codec test suite)."""
-    import json as _json
-
-    n = len(arr)
-    if arr.dtype == np.int32 or (n and arr.min() >= -(2**31) and arr.max() < 2**31) or n == 0:
-        w = 4
-    else:
-        w = 8
-    hdr = _json.dumps({"c": "plain", "n": n, "w": w},
-                      separators=(",", ":")).encode("utf-8")
-    return 4 + len(hdr) + w * n
-
-
 # ------------------------------------------------- frame-of-reference
 
-def enc_forbp(arr: np.ndarray) -> bytes:
+def _forbp(arr: np.ndarray) -> Lazy:
     n = len(arr)
     if n == 0:
         return make_blob({"c": "forbp", "n": 0, "min": 0, "rw": 0, "nb": 0}, b"")
@@ -81,13 +57,12 @@ def enc_forbp(arr: np.ndarray) -> bytes:
     bmin = R.min(axis=1)
     bres = R - bmin[:, None]
     widths = bitpack.bit_lengths(bres.max(axis=1))
-    rw = int(bitpack.bit_lengths(np.array([bmin.max()], dtype=np.uint64))[0])
-    parts = [widths.tobytes(), bitpack.pack(bmin, rw)]
+    rw = int(bmin.max()).bit_length()
+    parts = [widths.tobytes(), bitpack.packed(bmin, rw)]
     for w in np.unique(widths):
-        idx = widths == w
-        parts.append(bitpack.pack(bres[idx].ravel(), int(w)))
+        parts.append(bitpack.packed(bres[widths == w].ravel(), int(w)))
     header = {"c": "forbp", "n": n, "min": gmin, "rw": rw, "nb": nb}
-    return make_blob(header, pack_parts(parts))
+    return make_blob(header, framed(parts))
 
 
 def dec_forbp(header: dict, payload: bytes) -> np.ndarray:
@@ -108,7 +83,7 @@ def dec_forbp(header: dict, payload: bytes) -> np.ndarray:
 
 # ----------------------------------------------------- patched FOR (PFOR)
 
-def enc_pfor(arr: np.ndarray) -> bytes:
+def _pfor(arr: np.ndarray) -> Lazy:
     """Patched frame-of-reference: subtract min, pack every value at a
     single narrow width w, and 'patch' the few wide values from two side
     streams (positions as deltas, high bits). w is chosen exactly from the
@@ -117,13 +92,13 @@ def enc_pfor(arr: np.ndarray) -> bytes:
     mass pays w bits, the tail pays only its excess."""
     n = len(arr)
     if n == 0:
-        return make_blob({"c": "pfor", "n": 0, "min": 0, "w": 0}, pack_parts([b"", b"", b""]))
+        return make_blob({"c": "pfor", "n": 0, "min": 0, "w": 0}, framed([b"", b"", b""]))
     gmin = int(arr.min())
     gmax = int(arr.max())
     if gmax - gmin >= 2**32:
         raise OverflowError("pfor residual exceeds 32 bits")
     res = (arr.astype(np.int64, copy=False) - gmin).astype(np.uint32)
-    bl = bitpack.bit_lengths32(res)
+    bl = bitpack.bit_lengths(res)
     hist = np.bincount(bl, minlength=34)
     above = n - np.cumsum(hist)  # above[w] = #values with bit_length > w
     maxw = int(bl.max())
@@ -133,12 +108,11 @@ def enc_pfor(arr: np.ndarray) -> bytes:
     ]
     w = int(np.argmin(costs))
     lows = res & np.uint32((1 << w) - 1) if w else np.zeros(n, dtype=np.uint32)
-    lows_buf = bitpack.pack(lows, w)
     high_all = res >> np.uint32(w)
     pos = np.flatnonzero(high_all)
     highs = high_all[pos].astype(np.int64)
     deltas = np.diff(pos, prepend=-1).astype(np.int64) - 1
-    payload = pack_parts([lows_buf, _enc_sub(deltas), _enc_sub(highs)])
+    payload = framed([bitpack.packed(lows, w), _enc_sub(deltas), _enc_sub(highs)])
     return make_blob({"c": "pfor", "n": n, "min": gmin, "w": w}, payload)
 
 
@@ -168,12 +142,12 @@ def _runs(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return arr[starts], lengths
 
 
-def enc_rle(arr: np.ndarray) -> bytes:
+def _rle(arr: np.ndarray) -> Lazy:
     values, lengths = _runs(arr)
     vblob = _enc_sub(values)
     lblob = _enc_sub(lengths)
     header = {"c": "rle", "n": int(len(arr)), "r": int(len(values))}
-    return make_blob(header, pack_parts([vblob, lblob]))
+    return make_blob(header, framed([vblob, lblob]))
 
 
 def dec_rle(header: dict, payload: bytes) -> np.ndarray:
@@ -185,7 +159,7 @@ def dec_rle(header: dict, payload: bytes) -> np.ndarray:
 
 # ----------------------------------------------------------- dictionary
 
-def enc_dict(arr: np.ndarray) -> bytes:
+def _dict(arr: np.ndarray) -> Lazy:
     d = pa.array(arr).dictionary_encode()  # hash-based, no O(n log n) sort
     inv = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     uniq = d.dictionary.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -200,7 +174,7 @@ def enc_dict(arr: np.ndarray) -> bytes:
     vblob = _enc_sub(dict_values)
     cblob = _enc_sub(codes)
     header = {"c": "dict", "n": int(len(arr)), "k": int(len(uniq))}
-    return make_blob(header, pack_parts([vblob, cblob]))
+    return make_blob(header, framed([vblob, cblob]))
 
 
 def dec_dict(header: dict, payload: bytes) -> np.ndarray:
@@ -212,7 +186,7 @@ def dec_dict(header: dict, payload: bytes) -> np.ndarray:
 
 # -------------------------------------------------------------- delta
 
-def enc_delta(arr: np.ndarray) -> bytes:
+def _delta(arr: np.ndarray) -> Lazy:
     """Delta coding for sorted/near-sorted streams (monotone keys,
     clustered timestamps): zigzag the successive differences and feed
     them to the FOR sub-encoder — a sorted key column collapses to its
@@ -238,13 +212,13 @@ def enc_delta(arr: np.ndarray) -> bytes:
         # under its own selection
         lo32 = (zig & np.int64(0xFFFFFFFF))
         hi32 = (zig >> np.int64(32))
-        payload = pack_parts([
-            encode_ints(lo32, candidates=sub_cands),
-            encode_ints(hi32, candidates=sub_cands),
+        payload = framed([
+            select_ints(lo32, candidates=sub_cands),
+            select_ints(hi32, candidates=sub_cands),
         ])
         return make_blob({"c": "delta", "n": int(n), "f": int(arr[0]),
                           "sp": 1}, payload)
-    sub = encode_ints(zig, candidates=sub_cands) if n > 1 else b""
+    sub = select_ints(zig, candidates=sub_cands) if n > 1 else b""
     return make_blob({"c": "delta", "n": int(n), "f": int(arr[0]), "sp": 0},
                      sub)
 
@@ -270,24 +244,25 @@ def dec_delta(header: dict, payload: bytes) -> np.ndarray:
 
 # ----------------------------------------------------- selection (C6)
 
-def _enc_sub(arr: np.ndarray) -> bytes:
-    """Sub-stream encoder: forbp if it fits and wins, else plain.
+def _enc_sub(arr: np.ndarray) -> Lazy:
+    """Sub-stream encoder: forbp if it fits and is smaller, else plain.
     (No pfor here: pfor's own side streams use _enc_sub — keeping the
     recursion one level deep.)"""
+    plain = _plain(arr)
     try:
-        blob = enc_forbp(arr)
+        blob = _forbp(arr)
     except OverflowError:
-        return enc_plain(arr)
-    return blob if len(blob) < plain_blob_size(arr) else enc_plain(arr)
+        return plain
+    return blob if blob.size < plain.size else plain
 
 
-_ENCODERS = {
-    "plain": enc_plain,
-    "forbp": enc_forbp,
-    "pfor": enc_pfor,
-    "rle": enc_rle,
-    "dict": enc_dict,
-    "delta": enc_delta,
+_LAZY = {
+    "plain": _plain,
+    "forbp": _forbp,
+    "pfor": _pfor,
+    "rle": _rle,
+    "dict": _dict,
+    "delta": _delta,
 }
 _DECODERS = {
     "plain": dec_plain,
@@ -297,7 +272,20 @@ _DECODERS = {
     "dict": dec_dict,
     "delta": dec_delta,
 }
-INT_CODECS = tuple(_ENCODERS)
+INT_CODECS = tuple(_LAZY)
+
+
+def _eager(lazy_enc):
+    """The bytes-returning public form of a lazy encoder."""
+    def enc(arr: np.ndarray) -> bytes:
+        return lazy_enc(arr).tobytes()
+    enc.__name__ = enc.__qualname__ = "enc" + lazy_enc.__name__  # _plain -> enc_plain
+    enc.__doc__ = lazy_enc.__doc__
+    return enc
+
+
+_ENCODERS = {name: _eager(fn) for name, fn in _LAZY.items()}
+enc_plain, enc_forbp, enc_pfor, enc_rle, enc_dict, enc_delta = _ENCODERS.values()
 
 
 def _sample(arr: np.ndarray, target: int = SAMPLE, segments: int = 8) -> np.ndarray:
@@ -316,33 +304,27 @@ def _sample(arr: np.ndarray, target: int = SAMPLE, segments: int = 8) -> np.ndar
 CLOSE_CALL = 1.35
 
 
-def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> bytes:
-    """Sampled auto-selection: deterministic spread sample, encode under
-    each candidate, pick the smallest; plain-fallback guard.
+def select_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> Lazy:
+    """Size-first sampled auto-selection. Every candidate builds its
+    sub-streams on the deterministic spread sample and reports its exact
+    blob size; the smallest wins, and only the winner is built at full
+    size (when the stream fits in the sample, the winning probe is the
+    full blob). A plain-size guard follows.
 
     Sample estimates can flip rank on close calls (dict's cost grows with
     full-chunk cardinality in ways a fixed-size sample can't see), so when
-    the runner-up is within CLOSE_CALL of the winner, both are encoded at
-    full size and the smaller kept — still deterministic by content."""
+    a dict/pfor winner has forbp within CLOSE_CALL of it, forbp is sized
+    at full length too and kept only for a real gain — still
+    deterministic by content."""
     arr = np.ascontiguousarray(arr)
     sample = _sample(arr)
-    # when the sample IS the whole array (streams <= SAMPLE values — the
-    # common case for sub-streams: string lengths, dict codes, rle/pfor
-    # side streams), every candidate was already encoded at FULL size, so
-    # keep the blobs and skip the re-encode of the winner below —
-    # byte-identical output, roughly half the calls on small streams
-    sample_is_full = len(arr) <= SAMPLE
-    full_blobs: dict[str, bytes] = {}
-    sizes: list[tuple[int, str]] = []
+    probes: dict[str, Lazy] = {}
     for name in candidates:
         try:
-            b = _ENCODERS[name](sample)
+            probes[name] = _LAZY[name](sample)
         except OverflowError:
             continue
-        sizes.append((len(b), name))
-        if sample_is_full:
-            full_blobs[name] = b
-    sizes.sort()
+    sizes = sorted((b.size, name) for name, b in probes.items())
     # delta must win DECISIVELY (<= 0.7x the best alternative): its
     # output is high-entropy (zigzag steps), so a narrow pre-storage win
     # over plain/forbp turns into an on-disk LOSS once the blob parquet's
@@ -361,10 +343,12 @@ def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> by
         if hit:
             sizes.insert(0, hit[0])
     best_name = sizes[0][1] if sizes else "plain"
+    # a stream that fits in the sample was probed at full size already
+    full = probes if len(arr) <= SAMPLE else {}
     try:
-        blob = full_blobs.get(best_name) or _ENCODERS[best_name](arr)
+        blob = full.get(best_name) or _LAZY[best_name](arr)
     except OverflowError:
-        return enc_plain(arr)
+        return _plain(arr)
     # cross-check only when the sample winner's size grows NONLINEARLY with
     # chunk length (dict: cardinality growth; pfor: exception-rate drift) —
     # forbp/rle/plain sampled sizes extrapolate linearly and are trusted.
@@ -373,17 +357,21 @@ def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> by
         sizes
         and sizes[0][1] in ("dict", "pfor")
         and any(nm == "forbp" and sz < CLOSE_CALL * sizes[0][0] for sz, nm in sizes)
-        and not sample_is_full
+        and len(arr) > SAMPLE
     ):
         try:
-            alt = enc_forbp(arr)
-            if len(alt) < 0.98 * len(blob):  # switch only for a real gain
+            alt = _forbp(arr)
+            if alt.size < 0.98 * blob.size:  # switch only for a real gain
                 blob = alt
         except OverflowError:
             pass
-    if len(blob) >= plain_blob_size(arr):
-        return full_blobs.get("plain") or enc_plain(arr)
-    return blob
+    plain = _plain(arr)
+    return plain if blob.size >= plain.size else blob
+
+
+def encode_ints(arr: np.ndarray, candidates: tuple[str, ...] = INT_CODECS) -> bytes:
+    """The blob select_ints chooses, as bytes."""
+    return select_ints(arr, candidates).tobytes()
 
 
 def decode_ints(blob: bytes) -> np.ndarray:

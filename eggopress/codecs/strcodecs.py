@@ -11,8 +11,8 @@ via cumsum) and one contiguous byte buffer. Three buffer strategies:
               columns like `source`); codes via the int auto-selector,
               the unique-string pool recursively via str_plain/str_fsst
 
-Selection mirrors the int path: encode a deterministic sample under each
-candidate, pick the smallest, plain-fallback guard.
+Selection mirrors the int path: size each candidate exactly on a
+deterministic sample, build only the smallest, plain-size guard.
 """
 
 from __future__ import annotations
@@ -21,8 +21,8 @@ import numpy as np
 import pyarrow as pa
 
 from eggopress.codecs import fsst
-from eggopress.codecs.framing import make_blob, pack_parts, split_blob, unpack_parts
-from eggopress.codecs.intcodecs import decode_ints, encode_ints
+from eggopress.codecs.framing import Lazy, framed, make_blob, split_blob, unpack_parts
+from eggopress.codecs.intcodecs import decode_ints, select_ints
 
 SAMPLE_ROWS = 2048
 
@@ -34,10 +34,9 @@ def _slice(lengths: np.ndarray, buf: bytes, n: int) -> tuple[np.ndarray, bytes]:
     return ls, buf[: int(ls.sum())]
 
 
-def enc_str_plain(lengths: np.ndarray, buf: bytes,
-                  _lblob: bytes | None = None) -> bytes:
-    lblob = _lblob if _lblob is not None else encode_ints(lengths.astype(np.int64))
-    return make_blob({"c": "str_plain", "n": int(len(lengths))}, pack_parts([lblob, buf]))
+def _str_plain(lengths: np.ndarray, buf: bytes, lblob=None) -> Lazy:
+    lblob = select_ints(lengths.astype(np.int64, copy=False)) if lblob is None else lblob
+    return make_blob({"c": "str_plain", "n": int(len(lengths))}, framed([lblob, buf]))
 
 
 def dec_str_plain(header: dict, payload: bytes) -> tuple[np.ndarray, bytes]:
@@ -45,13 +44,12 @@ def dec_str_plain(header: dict, payload: bytes) -> tuple[np.ndarray, bytes]:
     return decode_ints(lblob), buf
 
 
-def enc_str_fsst(lengths: np.ndarray, buf: bytes,
-                 _lblob: bytes | None = None) -> bytes:
+def _str_fsst(lengths: np.ndarray, buf: bytes, lblob=None) -> Lazy:
     table = fsst.build_table(buf)
     enc = fsst.encode(buf, table)
-    lblob = _lblob if _lblob is not None else encode_ints(lengths.astype(np.int64))
+    lblob = select_ints(lengths.astype(np.int64, copy=False)) if lblob is None else lblob
     header = {"c": "str_fsst", "n": int(len(lengths)), "tab": fsst.table_to_json(table)}
-    return make_blob(header, pack_parts([lblob, enc]))
+    return make_blob(header, framed([lblob, enc]))
 
 
 def dec_str_fsst(header: dict, payload: bytes) -> tuple[np.ndarray, bytes]:
@@ -60,7 +58,8 @@ def dec_str_fsst(header: dict, payload: bytes) -> tuple[np.ndarray, bytes]:
     return decode_ints(lblob), fsst.decode(enc, table)
 
 
-def enc_str_dict(lengths: np.ndarray, buf: bytes) -> bytes:
+def _str_dict(lengths: np.ndarray, buf: bytes, lblob=None) -> Lazy:
+    """Ignores lblob: the lengths live in the unique-string pool."""
     n = len(lengths)
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
@@ -73,13 +72,12 @@ def enc_str_dict(lengths: np.ndarray, buf: bytes) -> bytes:
     uoff = np.frombuffer(uniq.buffers()[1], dtype=np.int32, count=len(uniq) + 1)
     ulens = np.diff(uoff).astype(np.int64)
     ubuf = uniq.buffers()[2].to_pybytes()[uoff[0] : uoff[-1]]
-    ulblob = encode_ints(ulens)
-    ublob_fsst = enc_str_fsst(ulens, ubuf, _lblob=ulblob)
-    ublob_plain = enc_str_plain(ulens, ubuf, _lblob=ulblob)
-    ublob = ublob_fsst if len(ublob_fsst) < len(ublob_plain) else ublob_plain
-    cblob = encode_ints(codes)
+    ulblob = select_ints(ulens)
+    ublob_fsst = _str_fsst(ulens, ubuf, ulblob)
+    ublob_plain = _str_plain(ulens, ubuf, ulblob)
+    ublob = ublob_fsst if ublob_fsst.size < ublob_plain.size else ublob_plain
     header = {"c": "str_dict", "n": n, "k": int(len(uniq))}
-    return make_blob(header, pack_parts([cblob, ublob]))
+    return make_blob(header, framed([select_ints(codes), ublob]))
 
 
 def dec_str_dict(header: dict, payload: bytes) -> tuple[np.ndarray, bytes]:
@@ -107,87 +105,68 @@ _DECODERS = {
     "str_fsst": dec_str_fsst,
     "str_dict": dec_str_dict,
 }
+_LAZY = {
+    "str_plain": _str_plain,
+    "str_fsst": _str_fsst,
+    "str_dict": _str_dict,
+}
+STR_CODECS = tuple(_LAZY)
+
+
+def enc_str_plain(lengths: np.ndarray, buf: bytes,
+                  _lblob: bytes | None = None) -> bytes:
+    return _str_plain(lengths, buf, _lblob).tobytes()
+
+
+def enc_str_fsst(lengths: np.ndarray, buf: bytes,
+                 _lblob: bytes | None = None) -> bytes:
+    return _str_fsst(lengths, buf, _lblob).tobytes()
+
+
+def enc_str_dict(lengths: np.ndarray, buf: bytes) -> bytes:
+    return _str_dict(lengths, buf).tobytes()
+
+
 _ENCODERS = {
     "str_plain": enc_str_plain,
     "str_fsst": enc_str_fsst,
     "str_dict": enc_str_dict,
 }
-STR_CODECS = tuple(_ENCODERS)
 
 
 def encode_strs(lengths: np.ndarray, buf: bytes,
                 candidates: tuple[str, ...] = STR_CODECS) -> bytes:
+    """Size-first sampled selection: each candidate is sized exactly on
+    the first SAMPLE_ROWS strings, the smallest wins (ties go to the
+    earlier candidate), only the winner is built at full size, and a
+    plain-size guard follows. When the column fits in the sample the
+    winning probe is the full blob.
+
+    The fsst probe (a symbol-table build and encode, the costliest) is
+    skipped when an exact lower bound proves it cannot win: fsst replaces
+    symbols of at most 8 bytes with 1-byte codes, so its blob is strictly
+    larger than len(lengths blob) + ceil(len(buf)/8); if that bound is
+    already >= another probe's size, fsst is not the first minimum."""
     lengths = np.ascontiguousarray(lengths, dtype=np.int64)
     s_len, s_buf = _slice(lengths, buf, SAMPLE_ROWS)
-    if candidates == STR_CODECS:
-        return _encode_strs_default(lengths, buf, s_len, s_buf)
-    best_name, best_size = "str_plain", None
-    for name in candidates:
-        size = len(_ENCODERS[name](s_len, s_buf))
-        if best_size is None or size < best_size:
-            best_name, best_size = name, size
-    blob = _ENCODERS[best_name](lengths, buf)
-    if best_name != "str_plain":
-        p = enc_str_plain(lengths, buf)
-        if len(blob) >= len(p):
-            return p
-    return blob
-
-
-def _encode_strs_default(lengths: np.ndarray, buf: bytes,
-                         s_len: np.ndarray, s_buf: bytes) -> bytes:
-    """Default-candidates selection with provably-redundant work removed.
-    Byte-identical to the generic loop above over (plain, fsst, dict) —
-    pinned by test_encode_strs_matches_reference_selection:
-
-    - the sample lengths blob is computed ONCE and shared by the plain
-      and fsst probes (both embed the identical encode_ints(lengths)
-      stream);
-    - the fsst probe is SKIPPED when an exact lower bound on its blob
-      size proves the argmin cannot change: fsst replaces symbols of at
-      most 8 bytes with 1-byte codes, so its payload is >= len(lblob) +
-      ceil(len(buf)/8) and the framed blob strictly larger. fsst is
-      selected only if f < p (probe order), and dict then only if
-      d < min(p, f); if LB >= p, fsst never replaces plain; if d < p and
-      d < LB <= f, dict beats both — either way the winner is decided by
-      the plain/dict comparison alone;
-    - when the sample IS the whole column, probe blobs are reused as the
-      full encodes (the same skip encode_ints applies to small streams);
-    - the full-size plain guard is SKIPPED when the winner's blob is
-      already <= len(buf): the full plain blob embeds buf verbatim plus
-      a non-empty header and lengths stream, so it is strictly larger
-      and can never be returned."""
-    sample_is_full = len(lengths) <= SAMPLE_ROWS
-    s_lblob = encode_ints(s_len)
-    p_blob = enc_str_plain(s_len, s_buf, _lblob=s_lblob)
-    p_size = len(p_blob)
-    d_blob = enc_str_dict(s_len, s_buf)
-    d_size = len(d_blob)
-    f_lb = len(s_lblob) + (len(s_buf) + 7) // 8
-    f_blob = None
-    if not (f_lb >= p_size or (d_size < p_size and d_size < f_lb)):
-        f_blob = enc_str_fsst(s_len, s_buf, _lblob=s_lblob)
-    # same argmin/tie semantics as the probe loop: strict < replaces, in
-    # (plain, fsst, dict) order
-    best_name, best_size = "str_plain", p_size
-    if f_blob is not None and len(f_blob) < best_size:
-        best_name, best_size = "str_fsst", len(f_blob)
-    if d_size < best_size:
-        best_name, best_size = "str_dict", d_size
-    if best_name == "str_plain":
-        return p_blob if sample_is_full else enc_str_plain(lengths, buf)
-    if sample_is_full:
-        blob = {"str_fsst": f_blob, "str_dict": d_blob}[best_name]
-        if len(blob) >= p_size:
-            return p_blob
-        return blob
-    blob = _ENCODERS[best_name](lengths, buf)
-    if len(blob) <= len(buf):  # full plain is strictly larger — guard moot
-        return blob
-    p = enc_str_plain(lengths, buf)
-    if len(blob) >= len(p):
-        return p
-    return blob
+    s_lblob = select_ints(s_len)
+    probes = {nm: _LAZY[nm](s_len, s_buf, s_lblob) for nm in candidates if nm != "str_fsst"}
+    f_lb = s_lblob.size + (len(s_buf) + 7) // 8
+    if "str_fsst" in candidates and not any(b.size <= f_lb for b in probes.values()):
+        probes["str_fsst"] = _str_fsst(s_len, s_buf, s_lblob)
+    best = min((nm for nm in candidates if nm in probes),
+               key=lambda nm: probes[nm].size, default="str_plain")
+    if len(lengths) <= SAMPLE_ROWS:  # the sample is the column: probes are full blobs
+        full, lblob = probes, s_lblob
+    else:
+        full, lblob = {}, (None if best == "str_dict" else select_ints(lengths))
+    blob = full.get(best) or _LAZY[best](lengths, buf, lblob)
+    # a full plain blob embeds buf verbatim plus a header and lengths
+    # stream, so a winner no larger than buf needs no plain guard
+    if best == "str_plain" or blob.size <= len(buf):
+        return blob.tobytes()
+    plain = full.get("str_plain") or _str_plain(lengths, buf, lblob)
+    return (plain if blob.size >= plain.size else blob).tobytes()
 
 
 def decode_strs(blob: bytes) -> tuple[np.ndarray, bytes]:

@@ -119,9 +119,15 @@ def test_bitpack_roundtrip_widths():
 
 
 def test_bit_lengths():
-    x = np.array([0, 1, 2, 3, 4, 255, 256, 2**31, 2**32 - 1], dtype=np.uint64)
-    expected = np.array([int(v).bit_length() for v in x], dtype=np.uint8)
-    np.testing.assert_array_equal(bitpack.bit_lengths(x), expected)
+    """Exact at every power-of-two boundary 2**k - 1 and 2**k, k = 0..32,
+    for both dtypes the codecs pass (uint32 residuals, uint64 maxima)."""
+    edges = sorted({v for k in range(33) for v in (2**k - 1, 2**k)})
+    for dtype in (np.uint32, np.uint64):
+        x = np.array([v for v in edges if v <= np.iinfo(dtype).max], dtype=dtype)
+        expected = np.array([int(v).bit_length() for v in x], dtype=np.uint8)
+        got = bitpack.bit_lengths(x)
+        assert got.dtype == np.uint8
+        np.testing.assert_array_equal(got, expected)
 
 
 # ------------------------------------------------------------- strings
@@ -185,24 +191,135 @@ def test_fsst_binary_random_roundtrip():
     assert fsst.decode(enc, table) == buf
 
 
+def _assert_sized_exactly(lazy_enc, eager_enc, *args):
+    """The exact size selection compares is the length of the blob the
+    public encoder returns, and sizing raises OverflowError exactly when
+    encoding does."""
+    try:
+        blob = lazy_enc(*args)
+    except OverflowError:
+        with pytest.raises(OverflowError):
+            eager_enc(*args)
+        return
+    built = blob.tobytes()
+    assert blob.size == len(built)
+    assert built == eager_enc(*args)
+
+
 @pytest.mark.parametrize("name", list(INT_CASES))
 def test_plain_blob_size_exact(name):
-    """The analytic plain size used by the plain-fallback guards must
-    equal the real blob byte-for-byte-in-length — selection decisions
-    hang on this equality (r06 optimization: the guards no longer build
-    a full plain payload per encoded stream)."""
-    from eggopress.codecs.intcodecs import plain_blob_size
+    """Every int encoder's size is exact — plain's, which the plain guard
+    compares against, each candidate's and the sub-stream encoder's,
+    which selection compares — for int32 and int64 input alike."""
+    from eggopress.codecs import intcodecs as ic
 
-    arr = INT_CASES[name]
-    assert plain_blob_size(arr) == len(enc_plain(arr))
-    assert plain_blob_size(arr.astype(np.int64)) == len(
-        enc_plain(arr.astype(np.int64)))
+    for arr in (INT_CASES[name], INT_CASES[name].astype(np.int64)):
+        for codec, lazy_enc in ic._LAZY.items():
+            _assert_sized_exactly(lazy_enc, ic._ENCODERS[codec], arr)
+        _assert_sized_exactly(ic._enc_sub, lambda a: ic._enc_sub(a).tobytes(), arr)
+        _assert_sized_exactly(ic.select_ints, ic.encode_ints, arr)
+
+
+@pytest.mark.parametrize("name", list(STR_CASES))
+def test_str_codec_size_is_blob_length(name):
+    from eggopress.codecs import strcodecs as sc
+
+    lengths, buf = _mk_strs(STR_CASES[name])
+    for codec, lazy_enc in sc._LAZY.items():
+        _assert_sized_exactly(lazy_enc, sc._ENCODERS[codec], lengths, buf)
+
+
+def _reference_encode_ints(arr, candidates=None):
+    """Probe-everything int selection: every candidate fully encoded on
+    the sample, the winner fully encoded again, sizes read off the bytes.
+    The size-first selector must return exactly this blob."""
+    from eggopress.codecs import intcodecs as ic
+
+    candidates = ic.INT_CODECS if candidates is None else candidates
+    arr = np.ascontiguousarray(arr)
+    sample = ic._sample(arr)
+    sizes = []
+    for name in candidates:
+        try:
+            b = ic._ENCODERS[name](sample)
+        except OverflowError:
+            continue
+        sizes.append((len(b), name))
+    sizes.sort()
+    if sizes and sizes[0][1] == "delta":
+        others = [s_ for s_ in sizes if s_[1] != "delta"]
+        if others and sizes[0][0] > 0.7 * others[0][0]:
+            sizes.pop(0)
+    if sizes and sizes[0][1] in ("pfor", "dict"):
+        hit = [s_ for s_ in sizes if s_[1] == "forbp" and s_[0] <= 1.02 * sizes[0][0]]
+        if hit:
+            sizes.insert(0, hit[0])
+    best_name = sizes[0][1] if sizes else "plain"
+    try:
+        blob = ic._ENCODERS[best_name](arr)
+    except OverflowError:
+        return ic.enc_plain(arr)
+    if (
+        sizes
+        and sizes[0][1] in ("dict", "pfor")
+        and any(nm == "forbp" and sz < ic.CLOSE_CALL * sizes[0][0] for sz, nm in sizes)
+        and len(arr) > ic.SAMPLE
+    ):
+        try:
+            alt = ic.enc_forbp(arr)
+            if len(alt) < 0.98 * len(blob):
+                blob = alt
+        except OverflowError:
+            pass
+    if len(blob) >= len(ic.enc_plain(arr)):
+        return ic.enc_plain(arr)
+    return blob
+
+
+def _lineitem_streams(n, rng):
+    """Int streams shaped like lineitem chunk columns, by the codec each
+    is expected to select."""
+    days = rng.integers(150, 350, n // 150 + 2)  # rows per ship date
+    tail = np.where(rng.random(n) < 0.004, 2**28, 0)
+    return {
+        "rle": np.repeat(9000 + np.arange(len(days)), days)[:n].astype(np.int32),
+        "dict": rng.choice(np.arange(11) / 100.0, n).view(np.int64),
+        "plain": (rng.integers(90000, 10500000, n) / 100.0).view(np.int64),
+        # order keys: sorted within each ship date, or sorted outright
+        "forbp": np.concatenate([np.sort(rng.integers(1, 6_000_000, d))
+                                 for d in days])[:n].astype(np.int64),
+        "delta": np.cumsum(rng.integers(1, 30, n)).astype(np.int64) + 3_000_000,
+        "pfor": np.minimum(rng.zipf(1.3, n), 4000).astype(np.int64) + tail,
+    }
+
+
+def test_encode_ints_matches_reference_selection():
+    """Size-first selection (exact sizes, only the winner built) returns
+    the very blob the probe-everything reference does: on every INT_CASES
+    stream, on lineitem-shaped streams at and around the sample size, and
+    under delta's sub-stream candidates (its zigzag steps)."""
+    from eggopress.codecs import intcodecs as ic
+
+    delta_sub = ("plain", "forbp", "pfor", "rle")
+    rng = np.random.default_rng(3)
+    streams = {f"case:{k}": v for k, v in INT_CASES.items()}
+    for n in (ic.SAMPLE - 1, ic.SAMPLE, ic.SAMPLE + 1, 8192):
+        for codec, arr in _lineitem_streams(n, rng).items():
+            assert len(arr) == n
+            streams[f"{codec}:{n}"] = arr
+            assert core.codec_of(core.encode_ints(arr)) == codec, codec
+    for name, arr in streams.items():
+        assert ic.encode_ints(arr) == _reference_encode_ints(arr), name
+        if len(arr) > 1 and np.ptp(arr.astype(np.int64)) < 2**62:
+            d = np.diff(arr.astype(np.int64))
+            zig = (d >> 63) ^ (d << 1)
+            assert ic.encode_ints(zig, delta_sub) == _reference_encode_ints(
+                zig, delta_sub), name
 
 
 def test_encode_strs_matches_reference_selection():
-    """The default-candidates fast path in encode_strs (shared sample
-    lengths blob, fsst lower-bound probe skip, sample==full blob reuse,
-    analytic plain-guard skip — r06 optimization) must stay BYTE-identical
+    """Size-first string selection (exact sizes, fsst lower-bound probe
+    skip, full-size probe reuse, plain-guard skip) must stay BYTE-identical
     to the plain probe-everything selection loop on every regime: the
     skips are argued from exact lower bounds, and this pins the argument."""
     from eggopress.codecs import strcodecs as sc

@@ -81,3 +81,20 @@ def test_encoding_is_deterministic_by_content(a, b):
     assert blob_a1 == blob_a2
     if len(a) == len(b) and np.array_equal(a, b):
         assert blob_a1 == core.encode_ints(b)
+
+
+@given(int_arrays())
+@settings(**SETTINGS)
+def test_exact_size_is_blob_length_any_input(arr):
+    """Selection compares exact sizes without building blobs: for every
+    int encoder, the sub-stream encoder and the selector itself, the size
+    equals the length of the blob it then builds."""
+    from eggopress.codecs import intcodecs as ic
+
+    for a in (arr, arr.astype(np.int64)):
+        for enc in (*ic._LAZY.values(), ic._enc_sub, ic.select_ints):
+            try:
+                blob = enc(a)
+            except OverflowError:
+                continue
+            assert blob.size == len(blob.tobytes())
